@@ -24,7 +24,6 @@ from __future__ import annotations
 import gc
 import os
 import shutil
-import statistics
 import sys
 import time
 from contextlib import contextmanager
@@ -41,28 +40,24 @@ MAX_LIVE_DIRS = 8
 ROUNDS = 2
 DELETE_CALLS_PER_ROUND = 3
 DELETE_CONVS_PER_CALL = 3
-BATCH_JOBS = 2
+BATCH_JOBS = 3
 BATCH_QUERIES = 200
-MIN_TOPK_CALLS = 8
+MIN_TOPK_CALLS = 6
 TOPK_SHARE = 0.1     # of --seconds, for the sequential topk calls
-LSM_QUERIES_PER_ROUND = 2
+LSM_QUERIES_PER_ROUND = 3
 MIN_SERVE_QUERIES = 2000
 STREAM_SHARE = 0.02  # of --seconds, for the warm serving stream
-SERVE_LOADS = 3
-LSM_SEARCHER_CHECKS = 50
-COMPACTED_CHECKS = 50
+LSM_SEARCHER_CHECKS = 20
+COMPACTED_CHECKS = 20
 OOV_SHARE = 0.02
 THRESHOLD_SHARE = 0.05
 THRESHOLD = 3.0
 
-WORKLOADS = {
-    # Zipf(1.1) draws over the term ranks, 1-6 terms, k up to 100: long
-    # posting lists, so decode and scoring carry the query cost
-    "zipf_head": {"zipf": 1.1, "terms": (1, 6), "ks": (5, 10, 30, 100)},
-    # uniform draws from the rarest 80% of terms, 1-3 terms, small k:
-    # short posting lists, so per-query fixed costs carry the query cost
-    "rare_tail": {"tail": 0.2, "terms": (1, 3), "ks": (5, 10)},
-}
+# the query mix: Zipf(1.1) draws over the term ranks (by document
+# frequency), 1-6 terms, k from KS
+ZIPF = 1.1
+TERMS = (1, 6)
+KS = (5, 10, 30, 100)
 
 
 @dataclass
@@ -129,38 +124,28 @@ def settle() -> None:
 
 
 class Queries:
-    """Seeded query draws for one workload over a term ranking."""
+    """Seeded query draws over a term ranking."""
 
-    def __init__(self, workload: str, terms: list[str], seed: int,
-                 stream: int = 0):
-        self.cfg = WORKLOADS[workload]
+    def __init__(self, terms: list[str], seed: int, stream: int = 0):
         self.terms = terms
         self.rng = np.random.default_rng([seed, 7, stream])
-        n = len(terms)
-        if "zipf" in self.cfg:
-            p = np.arange(1, n + 1, dtype=np.float64) ** -self.cfg["zipf"]
-            self.lo, self.p = 0, p / p.sum()
-        else:
-            self.lo, self.p = int(n * self.cfg["tail"]), None
+        p = np.arange(1, len(terms) + 1, dtype=np.float64) ** -ZIPF
+        self.p = p / p.sum()
 
     def draw(self, n: int, thresholds: bool = True
              ) -> list[tuple[str, int, float]]:
         rng, terms = self.rng, self.terms
-        lo_t, hi_t = self.cfg["terms"]
         out = []
         for _ in range(n):
-            nt = int(rng.integers(lo_t, hi_t + 1))
-            if self.p is not None:
-                idx = rng.choice(len(terms), size=nt, p=self.p)
-            else:
-                idx = rng.integers(self.lo, len(terms), size=nt)
+            nt = int(rng.integers(TERMS[0], TERMS[1] + 1))
+            idx = rng.choice(len(terms), size=nt, p=self.p)
             words = [terms[i] for i in idx]
             u = rng.random()
             if u < OOV_SHARE / 2:
                 words = [f"zzq{int(rng.integers(10**6))}x"]
             elif u < OOV_SHARE:
                 words.append(f"zzq{int(rng.integers(10**6))}x")
-            k = int(rng.choice(self.cfg["ks"]))
+            k = int(rng.choice(KS))
             thr = THRESHOLD if thresholds and rng.random() < THRESHOLD_SHARE \
                 else 0.0
             out.append((" ".join(words), k, thr))
@@ -186,8 +171,10 @@ def _searcher_rows(hits) -> list[tuple[str, int, float]]:
 
 def warm_up(spark, warm_path: str, root: str, nproc: int) -> None:
     """Build an index over a tiny corpus, so that the timed build runs on
-    a warm JVM and warm Python workers. The query path warms on the first
-    of the sequential topk calls, which the median discounts."""
+    a warm JVM and warm Python workers. The other paths warm on their
+    first timed call, which their medians discount: the first of
+    sequential topk calls, of BATCH_JOBS batch jobs, and of the LSM
+    queries typically takes 1.4-1.5x as long as the rest."""
     from visionsearch_spark.index.spimi import build_index
 
     build_index(spark.read.parquet(warm_path), root, n_partitions=nproc)
@@ -199,7 +186,7 @@ class Lifecycle:
     copy of the freshly built store, so that no JVM thread competes with
     the pure-Python serving tier."""
 
-    def __init__(self, oracle: Oracle, workload: str, seed: int,
+    def __init__(self, oracle: Oracle, seed: int,
                  seconds: float, root: str, nproc: int, tracer: Tracer,
                  ops: Ops):
         self.oracle, self.seconds, self.root = oracle, seconds, root
@@ -214,7 +201,7 @@ class Lifecycle:
         self.terms = oracle.terms_by_df(self.base)
         # one stream of draws per phase: what a phase asks does not depend
         # on how many draws an earlier, time-bounded phase made
-        self.queries = {phase: Queries(workload, self.terms, seed, i)
+        self.queries = {phase: Queries(self.terms, seed, i)
                         for i, phase in enumerate(
                             ("batch", "topk", "serve", "lsm", "check"))}
         self.rng = np.random.default_rng([seed, 11])
@@ -353,21 +340,11 @@ class Lifecycle:
                   for e in rec["errors"]]
         ops.check("fsck", "; ".join(errors) or None)
 
-        walls = tracer.walls
-        topk_s = walls("wand.topk")
-        self.metrics.update({
-            "build_s": walls("build")[0],
-            "batch_query_s": statistics.median(walls("wand.batch")),
-            "spark_query_p50_s": statistics.median(topk_s),
-            "append_p50_s": statistics.median(walls("append")),
-            "lsm_query_p50_s": statistics.median(walls("wand.lsm_topk")),
-            "compact_s": walls("compact")[0],
-        })
 
     def serving_phase(self) -> None:
         """LocalSearcher in a fresh process: its heap holds the serving
         tier only, not the oracle and the answers kept for checking, so
-        both workloads serve from the same clean state."""
+        every run serves from the same clean state."""
         import multiprocessing
         from concurrent.futures import ProcessPoolExecutor
 
@@ -380,10 +357,9 @@ class Lifecycle:
             out = ex.submit(serve, self.fresh_root, first_pass, stream,
                             STREAM_SHARE * self.seconds).result(timeout=170)
         self.tracer.spans += [Span(*sp) for sp in out["spans"]]
-        for got in out["passes"]:
-            for (q, k, thr), hits in zip(first_pass, got):
-                self.ops.check(f"serve {q!r}", check_ranked(
-                    hits, self.oracle.expect(q, k, thr, self.base)))
+        for (q, k, thr), hits in zip(first_pass, out["first_pass"]):
+            self.ops.check(f"serve {q!r}", check_ranked(
+                hits, self.oracle.expect(q, k, thr, self.base)))
         for (q, k, thr), hits in zip(stream, out["stream"]):
             self.ops.check(f"serve {q!r}", check_ranked(
                 hits, self.oracle.expect(q, k, thr, self.base)))
@@ -400,47 +376,47 @@ class Lifecycle:
 
 
 def serve(root: str, first_pass: list, stream: list, budget_s: float) -> dict:
-    """The serving phase, run in its own process. Each of SERVE_LOADS
-    searchers is loaded and given the first pass (cold decode cache); the
-    first one then serves the warm stream, one query after another, for at
-    least MIN_SERVE_QUERIES queries and budget_s seconds. RSS growth is
-    taken from before the first load to the end of the stream."""
+    """The serving phase, run in its own process. A searcher is loaded and
+    given the first pass (cold decode cache), then serves the warm stream,
+    one query after another, for at least MIN_SERVE_QUERIES queries and
+    budget_s seconds. RSS growth is taken from before the load to the end
+    of the stream. The timed loops keep no answers, so that the growth is
+    the searcher's own; the searcher answers both query lists again for
+    the check."""
     from visionsearch_spark.analyzer import tokenize
     from visionsearch_spark.index.store import IndexStore
     from visionsearch_spark.query.serving import LocalSearcher
 
     store = IndexStore(root)
-    spans, passes = [], []
+    lats = [0.0] * len(stream)
+    n = 0
     gc.collect()
     rss0 = rss_bytes()
-    for i in range(SERVE_LOADS):
-        t0 = time.time()
-        searcher = LocalSearcher(store)
-        t1 = time.time()
-        got = [searcher.search(q, k=k, threshold=thr)
-               for q, k, thr in first_pass]
-        t2 = time.time()
-        spans += [("serving.load", t0, t1, 1),
-                  ("serving.first_pass", t1, t2, len(first_pass))]
-        passes.append([_searcher_rows(h) for h in got])
-        if i == 0:
-            lats, hits = [], []
-            t_start = time.time()
-            t_end = time.perf_counter() + budget_s
-            for q, k, thr in stream:
-                if len(lats) >= MIN_SERVE_QUERIES \
-                        and time.perf_counter() >= t_end:
-                    break
-                t = time.perf_counter()
-                h = searcher.search(q, k=k, threshold=thr)
-                lats.append(time.perf_counter() - t)
-                hits.append(h)
-            spans.append(("serving.stream", t_start, time.time(), len(lats)))
-            rss_growth = rss_bytes() - rss0
-            postings = [sum(searcher.df(t) for t in set(tokenize(q)))
-                        for q, _k, _t in stream[:len(lats)]]
-        del searcher, got
-        gc.collect()
-    return {"spans": spans, "passes": passes, "lat_s": lats,
-            "stream": [_searcher_rows(h) for h in hits],
-            "postings": postings, "rss_growth": rss_growth}
+    t0 = time.time()
+    searcher = LocalSearcher(store)
+    t1 = time.time()
+    for q, k, thr in first_pass:
+        searcher.search(q, k=k, threshold=thr)
+    t2 = time.time()
+    t_end = time.perf_counter() + budget_s
+    for q, k, thr in stream:
+        if n >= MIN_SERVE_QUERIES and time.perf_counter() >= t_end:
+            break
+        t = time.perf_counter()
+        searcher.search(q, k=k, threshold=thr)
+        lats[n] = time.perf_counter() - t
+        n += 1
+    t3 = time.time()
+    rss_growth = rss_bytes() - rss0
+    stream = stream[:n]
+    return {"spans": [("serving.load", t0, t1, 1),
+                      ("serving.first_pass", t1, t2, len(first_pass)),
+                      ("serving.stream", t2, t3, n)],
+            "first_pass": [_searcher_rows(searcher.search(q, k=k,
+                                                          threshold=thr))
+                           for q, k, thr in first_pass],
+            "stream": [_searcher_rows(searcher.search(q, k=k, threshold=thr))
+                       for q, k, thr in stream],
+            "lat_s": lats[:n], "rss_growth": rss_growth,
+            "postings": [sum(searcher.df(t) for t in set(tokenize(q)))
+                         for q, _k, _t in stream]}
