@@ -6,12 +6,20 @@ Jobs are attributed to a span by submission time, not by job group:
 build_index and compact_store submit some jobs from driver threads, which
 need not carry the caller's job group. The client is a single closed loop,
 so every job submitted while a span is open belongs to it.
+
+The driver time of a span, its wall outside every Spark job, is split by
+sampling the main thread's stack (Sampler): time waiting on the JVM
+through py4j (query planning and analysis, job submission) and time in
+Python on the driver (the library and pyspark).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
+import time
 
 import numpy as np
 
@@ -36,6 +44,49 @@ STAGE_SEC = {  # build_index's meta stage_sec keys -> layer metric
     "spimi": "spimi.kernel_s",
     "term_stats+compact_write": "spimi.merge_write_s",
 }
+
+
+# innermost package on the main thread's stack -> what the driver is doing
+STACK_ROOTS = {"py4j": "jvm", "pyspark": "python",
+               "visionsearch_spark": "python", "perfbench": "bench"}
+DRIVER_LABELS = ("jvm", "python")  # the driver time a layer accounts for
+
+
+class Sampler:
+    """Samples the main thread's stack every interval_s seconds, each
+    sample labelled by stack_label: (epoch time, label)."""
+
+    def __init__(self, interval_s: float = 0.005):
+        self.interval_s = interval_s
+        self.samples: list[tuple[float, str]] = []
+        self._main = threading.main_thread().ident
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._run, daemon=True)
+
+    def __enter__(self) -> "Sampler":
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._stop.set()
+        self._thread.join()
+
+    def _run(self) -> None:
+        while not self._stop.wait(self.interval_s):
+            frame = sys._current_frames().get(self._main)
+            self.samples.append((time.time(), stack_label(frame)))
+
+
+def stack_label(frame) -> str:
+    """The STACK_ROOTS label of the innermost frame whose file lies in one
+    of its packages; frames of other modules (the standard library,
+    pandas) count for the package that called them."""
+    while frame is not None:
+        for part in reversed(frame.f_code.co_filename.split(os.sep)):
+            if part in STACK_ROOTS:
+                return STACK_ROOTS[part]
+        frame = frame.f_back
+    return "other"
 
 
 def read_event_log(log_dir: str) -> tuple[dict, dict]:
@@ -102,21 +153,27 @@ def _fold_task(st: dict, ev: dict) -> None:
             st[key] += v / 1e3 if key.endswith("_s") else v
 
 
-def _union(intervals: list[tuple[float, float]]) -> float:
-    total, cur_s, cur_e = 0.0, None, None
+def _merge(intervals: list[tuple[float, float]]) -> list[list[float]]:
+    out: list[list[float]] = []
     for s, e in sorted(intervals):
-        if cur_e is None or s > cur_e:
-            if cur_e is not None:
-                total += cur_e - cur_s
-            cur_s, cur_e = s, e
+        if out and s <= out[-1][1]:
+            out[-1][1] = max(out[-1][1], e)
         else:
-            cur_e = max(cur_e, e)
-    return total + (cur_e - cur_s if cur_e is not None else 0.0)
+            out.append([s, e])
+    return out
 
 
-def fold_groups(spans, jobs: dict, stages: dict) -> dict[str, dict]:
+def _outside(a: float, b: float, merged: list[list[float]]) -> float:
+    """Length of [a, b] outside the merged intervals."""
+    return max(0.0, b - a) - sum(max(0.0, min(b, e) - max(a, s))
+                                 for s, e in merged)
+
+
+def fold_groups(spans, jobs: dict, stages: dict,
+                samples: list[tuple[float, str]]) -> dict[str, dict]:
     """Totals per span group: wall, job time (union of job intervals
-    inside the span), driver time (the rest), jobs, and the task and
+    inside the span), driver time (the rest) and the part of it the stack
+    samples attribute to each DRIVER_LABELS label, jobs, and the task and
     Python-boundary totals of the jobs' stages."""
     # event times have millisecond resolution
     eps = 2e-3
@@ -124,10 +181,12 @@ def fold_groups(spans, jobs: dict, stages: dict) -> dict[str, dict]:
     for jid in sorted(jobs):
         for sid in jobs[jid]["stages"]:
             owner.setdefault(sid, jid)
+    times = np.asarray([t for t, _l in samples], dtype=np.float64)
     groups: dict[str, dict] = {}
     for sp in spans:
         g = groups.setdefault(sp.name, {
             "spans": 0, "units": 0, "wall_s": 0.0, "job_s": 0.0,
+            "driver_s": 0.0, **{f"driver_{x}_s": 0.0 for x in DRIVER_LABELS},
             "jobs": 0, "tasks": 0, "failed_tasks": 0, "run_s": 0.0,
             "cpu_s": 0.0, "gc_s": 0.0, "sched_delay_s": 0.0,
             "shuffle_write_bytes": 0, "input_bytes": 0, "output_bytes": 0,
@@ -140,17 +199,28 @@ def fold_groups(spans, jobs: dict, stages: dict) -> dict[str, dict]:
         mine = [j for j, job in jobs.items()
                 if sp.start - eps <= job["submit"] <= sp.end + eps]
         g["jobs"] += len(mine)
-        g["job_s"] += min(wall, _union([
-            (max(jobs[j]["submit"], sp.start),
-             min(jobs[j]["end"] or sp.end, sp.end)) for j in mine]))
+        intervals = [(max(jobs[j]["submit"], sp.start),
+                      min(jobs[j]["end"] or sp.end, sp.end)) for j in mine]
+        merged = _merge(intervals)
+        job_s = min(wall, sum(e - s for s, e in merged))
+        g["job_s"] += job_s
+        g["driver_s"] += wall - job_s
+        # each stack sample stands for the time since the one before it;
+        # the part of that time inside the span and outside its jobs goes
+        # to the sample's label. Driver time no sample reaches, or that
+        # the benchmark's own code takes, goes to no label.
+        lo, hi = np.searchsorted(times, [sp.start, sp.end])
+        for i in range(lo, min(hi + 1, len(samples))):
+            if samples[i][1] in DRIVER_LABELS:
+                prev = times[i - 1] if i else sp.start
+                g[f"driver_{samples[i][1]}_s"] += _outside(
+                    max(prev, sp.start), min(times[i], sp.end), merged)
         for j in mine:
             for sid in jobs[j]["stages"]:
                 if owner.get(sid) != j or sid not in stages:
                     continue
                 for key, v in stages[sid].items():
                     g[key] += v
-    for g in groups.values():
-        g["driver_s"] = g["wall_s"] - g["job_s"]
     return groups
 
 
@@ -159,9 +229,10 @@ def _median(spans, name: str) -> float:
     return float(np.median(walls)) if walls else 0.0
 
 
-def layer_metrics(spans, jobs: dict, stages: dict, facts: dict) -> dict:
+def layer_metrics(spans, jobs: dict, stages: dict, facts: dict,
+                  samples: list[tuple[float, str]]) -> dict:
     """The per_layer metrics of BENCHMARK.json, by name."""
-    groups = fold_groups(spans, jobs, stages)
+    groups = fold_groups(spans, jobs, stages, samples)
     empty = {"spans": 0, "units": 0}
     out: dict[str, float] = {}
     ss = facts["stage_sec"]
@@ -213,7 +284,16 @@ def layer_metrics(spans, jobs: dict, stages: dict, facts: dict) -> dict:
         out[f"{name}.tasks_per_query"] = g.get("tasks", 0) / n
         out[f"{name}.job_s_per_query"] = g.get("job_s", 0.0) / n
         out[f"{name}.driver_s_per_query"] = g.get("driver_s", 0.0) / n
+        for x in DRIVER_LABELS:
+            out[f"{name}.driver_{x}_s_per_query"] = (
+                g.get(f"driver_{x}_s", 0.0) / n)
         out[f"{name}.scheduler_delay_s"] = g.get("sched_delay_s", 0.0) / n
+
+    for name in ("build", "append", "compact"):
+        g = groups.get(name, empty)
+        for x in DRIVER_LABELS:
+            out[f"{name}.driver_{x}_s"] = (g.get(f"driver_{x}_s", 0.0)
+                                           / max(1, g["spans"]))
 
     # boundary totals per operation of the group (per query for queries)
     for name in SPARK_GROUPS:
@@ -233,27 +313,24 @@ def layer_metrics(spans, jobs: dict, stages: dict, facts: dict) -> dict:
     out["serving.ns_per_posting"] = float(per_posting) * 1e9
 
     out["trace.wall_s"] = sum(sp.end - sp.start for sp in spans)
-    out["trace.coverage"] = coverage(groups, ss)
+    out["trace.coverage"] = coverage(groups)
     return {k: float(v) for k, v in out.items()}
 
 
-def coverage(groups: dict[str, dict], stage_sec: dict) -> float:
+def coverage(groups: dict[str, dict]) -> float:
     """Share of the timed wall that a layer's own time accounts for.
 
-    build counts its named stages (meta stage_sec); the other Spark groups
-    count the time their Spark jobs ran. Their driver_s, the wall outside
-    every job, is attributed to no layer and counts as uncovered. Deletes
-    and serving run no Spark job: each of their spans is one layer's
-    time."""
+    A Spark group counts the time its Spark jobs ran, and the driver time
+    its stack samples attribute to the JVM or to Python in the library and
+    pyspark. Driver time sampled in the benchmark's own code or elsewhere,
+    or not sampled at all, counts as uncovered. Deletes and serving run no
+    Spark job: each of their spans is one layer's time."""
     wall = sum(g["wall_s"] for g in groups.values())
     covered = 0.0
     for name, g in groups.items():
-        if name == "build":
-            covered += min(g["wall_s"], sum(
-                float(v) for v in stage_sec.values()
-                if isinstance(v, (int, float))))
-        elif name in SPARK_GROUPS:
-            covered += g["job_s"]
+        if name in SPARK_GROUPS:
+            covered += g["job_s"] + sum(g[f"driver_{x}_s"]
+                                        for x in DRIVER_LABELS)
         else:
             covered += g["wall_s"]
     return covered / wall if wall else 0.0

@@ -37,14 +37,14 @@ from perfbench.check import Oracle, State, check_docid_order, check_ranked
 # than this (its max_live_dirs default); the rounds stay below it so that
 # append_p50_s times appends only
 MAX_LIVE_DIRS = 8
-ROUNDS = 2
+ROUNDS = 1
 DELETE_CALLS_PER_ROUND = 3
 DELETE_CONVS_PER_CALL = 3
-BATCH_JOBS = 3
+BATCH_JOBS = 2
 BATCH_QUERIES = 200
-MIN_TOPK_CALLS = 6
-TOPK_SHARE = 0.1     # of --seconds, for the sequential topk calls
-LSM_QUERIES_PER_ROUND = 3
+MIN_TOPK_CALLS = 4
+TOPK_SHARE = 0.05    # of --seconds, for the sequential topk calls
+LSM_QUERIES_PER_ROUND = 2
 MIN_SERVE_QUERIES = 2000
 STREAM_SHARE = 0.02  # of --seconds, for the warm serving stream
 LSM_SEARCHER_CHECKS = 20
@@ -345,17 +345,23 @@ class Lifecycle:
         """LocalSearcher in a fresh process: its heap holds the serving
         tier only, not the oracle and the answers kept for checking, so
         every run serves from the same clean state."""
-        import multiprocessing
-        from concurrent.futures import ProcessPoolExecutor
+        import pickle
+        import subprocess
 
         log("serving")
         first_pass = [(t, 10, 0.0) for t in self.terms]
         # more than the stream can use: it stops at its time budget
         stream = self.queries["serve"].draw(4 * MIN_SERVE_QUERIES)
-        with ProcessPoolExecutor(
-                1, mp_context=multiprocessing.get_context("spawn")) as ex:
-            out = ex.submit(serve, self.fresh_root, first_pass, stream,
-                            STREAM_SHARE * self.seconds).result(timeout=170)
+        job = os.path.join(os.path.dirname(self.root), "serve")
+        with open(job + ".in", "wb") as f:
+            pickle.dump((self.fresh_root, first_pass, stream,
+                         STREAM_SHARE * self.seconds), f)
+        # a plain child process, waited for: no pool, no resource tracker
+        # left behind
+        subprocess.run([sys.executable, "-m", "perfbench.lifecycle", job],
+                       check=True, timeout=170)
+        with open(job + ".out", "rb") as f:
+            out = pickle.load(f)
         self.tracer.spans += [Span(*sp) for sp in out["spans"]]
         for (q, k, thr), hits in zip(first_pass, out["first_pass"]):
             self.ops.check(f"serve {q!r}", check_ranked(
@@ -420,3 +426,15 @@ def serve(root: str, first_pass: list, stream: list, budget_s: float) -> dict:
             "lat_s": lats[:n], "rss_growth": rss_growth,
             "postings": [sum(searcher.df(t) for t in set(tokenize(q)))
                          for q, _k, _t in stream]}
+
+
+if __name__ == "__main__":
+    # python3 -m perfbench.lifecycle JOB: the serving phase of a run, over
+    # the arguments pickled in JOB.in; the result goes to JOB.out
+    import pickle
+
+    with open(sys.argv[1] + ".in", "rb") as f:
+        job_args = pickle.load(f)
+    result = serve(*job_args)
+    with open(sys.argv[1] + ".out", "wb") as f:
+        pickle.dump(result, f)

@@ -1,6 +1,6 @@
 """Benchmark of the visionsearch_spark index lifecycle.
 
-    python3 perfbench/run.py --workload turns --seed 1 --seconds 30 \
+    python3 perfbench/run.py --workload turns --seed 1 --seconds 20 \
         --trace 0
 
 One process, one closed-loop client, Spark on local[nproc]. The run
@@ -12,13 +12,14 @@ it (lifecycle.py). Every answer is checked against an exhaustive oracle
 the run exit 1.
 
 --trace 0 prints the end-to-end metrics; --trace 1 enables Spark's event
-log and prints the per-layer metrics (layers.py) instead. The last line of
-stdout is one JSON object: {"correct", "attempted", "failed", "metrics"}.
-Each run also writes a record under .perfbench_work/records/.
+log, samples the driver's stack, and prints the per-layer metrics
+(layers.py) instead. The last line of stdout is one JSON object:
+{"correct", "attempted", "failed", "metrics"}. Each run also writes a
+record under .perfbench_work/records/.
 
 --seconds is the time budget of the two open-ended loops: sequential topk
-calls get a tenth of it and the warm serving stream a fiftieth; each loop
-also has a minimum count (lifecycle.py).
+calls get a twentieth of it and the warm serving stream a fiftieth; each
+loop also has a minimum count (lifecycle.py).
 
 Everything the run writes (corpus cache, stores, Spark scratch, event
 logs, records) stays under .perfbench_work/ at the repository root.
@@ -27,10 +28,12 @@ logs, records) stays under .perfbench_work/ at the repository root.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import hashlib
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -173,8 +176,8 @@ def start_spark(run_dir: str, event_dir: str | None):
 
 
 def stop_spark(spark) -> None:
-    """Stop the session and wait for the JVM (and with it the Python
-    worker daemon) to exit."""
+    """Stop the session and wait for the JVM, and then for the Python
+    worker daemon it started, to exit."""
     from pyspark import SparkContext
 
     gateway = SparkContext._gateway
@@ -193,13 +196,67 @@ def stop_spark(spark) -> None:
             proc.wait()
     SparkContext._gateway = None
     SparkContext._jvm = None
+    # the daemon sees the JVM's pipe close and exits a moment later; as
+    # an orphan it is this process's child now (become_subreaper)
+    reap()
+
+
+def become_subreaper() -> None:
+    """Adopt every orphaned descendant, so that reap() can wait for
+    processes whose parent exits first, such as Spark's Python worker
+    daemon once the JVM has gone."""
+    import ctypes
+
+    pr_set_child_subreaper = 36
+    ctypes.CDLL(None, use_errno=True).prctl(pr_set_child_subreaper, 1, 0,
+                                            0, 0)
+
+
+def children() -> list[int]:
+    me, out = os.getpid(), []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        if int(stat.rsplit(")", 1)[1].split()[1]) == me:
+            out.append(int(name))
+    return out
+
+
+def reap(grace_s: float = 10.0) -> None:
+    """Wait until no child process is left: first for grace_s seconds,
+    then after SIGTERM, then after SIGKILL."""
+    deadline = time.monotonic() + grace_s
+    sig = None
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            pass
+        left = children()
+        if not left:
+            return
+        if time.monotonic() >= deadline:
+            sig = signal.SIGKILL if sig == signal.SIGTERM else signal.SIGTERM
+            for pid in left:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+            deadline = time.monotonic() + 5
+        time.sleep(0.02)
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--seconds", type=float, default=30.0)
+    ap.add_argument("--seconds", type=float, default=20.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
@@ -215,6 +272,8 @@ def main(argv: list[str] | None = None) -> int:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
     from perfbench import layers, lifecycle
+
+    become_subreaper()
 
     if args.workload not in WORKLOADS:
         print(f"unknown workload {args.workload!r}; one of "
@@ -245,6 +304,7 @@ def main(argv: list[str] | None = None) -> int:
     cycle = lifecycle.Lifecycle(oracle, args.seed, args.seconds,
                                 os.path.join(run_dir, "index"), nproc(),
                                 tracer, ops)
+    sampler = layers.Sampler() if args.trace else None
     spark = None
     ok = False
     try:
@@ -255,7 +315,9 @@ def main(argv: list[str] | None = None) -> int:
                           nproc())
         cycle.metrics["setup_s"] = time.perf_counter() - t0
         lifecycle.log(f"set-up took {cycle.metrics['setup_s']:.1f} s")
-        cycle.spark_phases(spark, corpus_path)
+        # traced runs sample the driver's stack to split its time
+        with sampler if sampler else contextlib.nullcontext():
+            cycle.spark_phases(spark, corpus_path)
         stop_spark(spark)
         spark = None
         cycle.serving_phase()
@@ -268,6 +330,7 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         if spark is not None:
             stop_spark(spark)
+        reap()
     lifecycle.log("lifecycle done")
 
     e2e = cycle.metrics if ok else {}
@@ -275,7 +338,7 @@ def main(argv: list[str] | None = None) -> int:
     if ok and args.trace:
         jobs, stages = layers.read_event_log(event_dir)
         metrics = layers.layer_metrics(tracer.spans, jobs, stages,
-                                       cycle.facts)
+                                       cycle.facts, sampler.samples)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         declared = json.load(f)["per_layer" if args.trace else "end_to_end"]
     missing = [m["name"] for m in declared if m["name"] not in metrics]
